@@ -45,9 +45,11 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
+import os
+import re
 import time
 from dataclasses import dataclass, field
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +77,15 @@ RESULT_COLUMNS = [
     "field_name", "value", "confidence", "page", "bounding_box",
     "is_valid", "errors",
 ]
+
+# The docs-table columns a status lookup reads, typed as the fused
+# stage writes them. Reading a chunk with this explicit schema skips
+# Spark's schema inference, which runs a footer-reading job of its own
+# on every lookup.
+STATUS_SCHEMA = ", ".join(
+    col for col in EXTRACTED_SCHEMA.split(", ")
+    if col.split(" ")[0] in ("url", "bucket", "status", "error", "proc_ms")
+)
 
 
 @dataclass
@@ -128,6 +139,48 @@ def _checked_ts(spark: SparkSession, bound: str, name: str) -> str:
     return canon
 
 
+def _day_range(
+    ts_min: Optional[str], ts_max: Optional[str]
+) -> Tuple[Optional[str], Optional[str]]:
+    """Inclusive ``warc_date`` bounds ('YYYY-MM-DD', None = open) of a
+    ts window: the days its bounds fall on. The day range contains the
+    exact ``[ts_min, ts_max)`` range, so filtering on it first only
+    prunes rows the exact predicate would drop anyway."""
+    return (
+        None if ts_min is None else ts_min[:10],
+        None if ts_max is None else ts_max[:10],
+    )
+
+
+def _in_days(
+    df: DataFrame, ts_min: Optional[str], ts_max: Optional[str]
+) -> DataFrame:
+    """``df`` restricted to the day range of a ts window — a predicate
+    on the partition column, so the scan prunes whole day-directories
+    at plan time."""
+    lo, hi = _day_range(ts_min, ts_max)
+    if lo is not None:
+        df = df.where(F.col("warc_date") >= F.lit(lo))
+    if hi is not None:
+        df = df.where(F.col("warc_date") <= F.lit(hi))
+    return df
+
+
+_DAY_DIR = re.compile(r"warc_date=(\d{4}-\d{2}-\d{2})")
+
+
+def _day_dir_kept(name: str, lo: Optional[str], hi: Optional[str]) -> bool:
+    """False only for a ``warc_date=YYYY-MM-DD`` directory that
+    :func:`_in_days` prunes. Any other name (non-partition directories,
+    the null partition, other spellings) is kept, so an estimate walked
+    with this test stays an upper bound of the rows the scan reads."""
+    m = _DAY_DIR.fullmatch(name)
+    if m is None:
+        return True
+    day = m.group(1)
+    return (lo is None or day >= lo) and (hi is None or day <= hi)
+
+
 def _input_slice(
     pages: DataFrame,
     n_buckets: int,
@@ -148,11 +201,10 @@ def _input_slice(
     # _checked_ts ONCE at submit time): a malformed bound would make
     # to_timestamp NULL, every predicate NULL, and the chunk would
     # commit as done with ZERO docs (ADVICE round 2).
+    df = _in_days(df, ts_min, ts_max)
     if ts_min is not None:
-        df = df.where(F.col("warc_date") >= F.lit(ts_min[:10]))
         df = df.where(F.col("warc_ts") >= F.to_timestamp(F.lit(ts_min)))
     if ts_max is not None:
-        df = df.where(F.col("warc_date") <= F.lit(ts_max[:10]))
         df = df.where(F.col("warc_ts") < F.to_timestamp(F.lit(ts_max)))
     df = with_bucket(df.select("url", "html"), n_buckets)
     return df.where(
@@ -214,19 +266,31 @@ def _defuse_skew(
     return bulk.unionByName(giants)
 
 
-def _estimate_rows(pages: DataFrame, pages_path: str) -> int:
-    """Input row count for task-wave sizing, WITHOUT a Spark job when
-    the input is a local parquet directory: parquet footers carry exact
-    row counts, and reading them driver-side with pyarrow costs ~0.1 ms
-    per file (measured 0.08 s for a 960-file corpus) where the
-    ``count()`` job measured 0.6-1.5 s of parallelism-independent tail
-    per run. Non-local paths (hdfs://, s3a://) and any read failure
-    fall back to the metadata-only Spark count — on a real cluster that
-    job is a negligible fraction of a chunk's work. The estimate only
-    SIZES WAVES; it can never affect results (and both paths return the
-    same exact footer total)."""
-    import os
+def _estimate_rows(
+    pages: DataFrame,
+    pages_path: str,
+    ts_min: Optional[str] = None,
+    ts_max: Optional[str] = None,
+) -> int:
+    """Upper bound of the rows a ts window reads, for task-wave sizing.
 
+    It applies the same day predicate as :func:`_input_slice` (shared
+    through :func:`_day_range`), so a 3-day window of a 30-day table is
+    sized from its own ~10% of the rows, not the whole table. The day
+    range contains the exact ``warc_ts`` range, so the estimate never
+    falls below the rows the chunk processes, and it only sizes waves:
+    results cannot change.
+
+    A local parquet directory is counted WITHOUT a Spark job: parquet
+    footers carry exact row counts, and reading them driver-side with
+    pyarrow costs ~0.1 ms per file (0.08 s for a 960-file corpus) where
+    a ``count()`` job measured 0.6-1.5 s of parallelism-independent
+    tail. ``warc_date=`` directories outside the day range are not
+    walked at all. Non-local paths (hdfs://, s3a://), a directory with
+    no recognizable parquet layout and any read failure fall back to a
+    Spark count of the day-filtered frame, which partition pruning and
+    footer statistics keep metadata-only."""
+    lo, hi = _day_range(ts_min, ts_max)
     p = pages_path
     if p.startswith("file:"):
         p = p.split(":", 1)[1].lstrip("/")
@@ -235,18 +299,22 @@ def _estimate_rows(pages: DataFrame, pages_path: str) -> int:
         try:
             import pyarrow.parquet as pq
 
-            total = 0
-            for root, _, files in os.walk(p):
+            total, layout_known = 0, False
+            for root, dirs, files in os.walk(p):
+                kept = [d for d in dirs if _day_dir_kept(d, lo, hi)]
+                layout_known |= len(kept) < len(dirs)
+                dirs[:] = kept
                 for f in files:
                     if f.endswith(".parquet"):
+                        layout_known = True
                         total += pq.ParquetFile(
                             os.path.join(root, f)
                         ).metadata.num_rows
-            if total > 0:
+            if layout_known:
                 return total
         except Exception:
             pass
-    return pages.count()
+    return _in_days(pages, ts_min, ts_max).count()
 
 
 def run_pipeline(
@@ -268,7 +336,9 @@ def run_pipeline(
     """Run the extraction pipeline, chunk by chunk, committing results +
     lineage per chunk. ``resume=True`` skips chunks whose lineage says
     done and recomputes only the rest; output is unchanged vs a clean
-    run (tested).
+    run (tested). A resume that finds every chunk done returns right
+    after the manifest checks and the lineage scan, without opening
+    ``pages_path`` (its ``wall_sec`` is 0.0).
 
     ``max_concurrent_chunks > 1`` submits that many chunk jobs from
     concurrent driver threads: each chunk's tail wave and driver-side
@@ -281,7 +351,6 @@ def run_pipeline(
     par = parallelism or spark.sparkContext.defaultParallelism
     ckpt = CheckpointManager(spark, out_root)
     run_id = new_run_id()
-    pages = spark.read.parquet(pages_path)
 
     # Validate/normalize the time bounds ONCE at submit time — before
     # the manifest is pinned and before any chunk is scheduled — so a
@@ -304,6 +373,7 @@ def run_pipeline(
         "ts_max": ts_max,
         "mode": mode,
     }
+    pages: Optional[DataFrame] = None
     if resume:
         # Migration shim: manifests committed before bounds were
         # canonicalized pinned the RAW spelling ('2025-01-01'); if the
@@ -324,24 +394,44 @@ def run_pipeline(
                         migrated = True
             if migrated:
                 ckpt.write_manifest(committed)
+        else:
+            # Nothing is committed, so the fast path below cannot apply:
+            # resolve the input before check_manifest pins the manifest,
+            # so a bad pages_path leaves no manifest behind.
+            pages = spark.read.parquet(pages_path)
         ckpt.check_manifest(manifest)
+        done_chunks = ckpt.done_chunks("extracted")
     else:
-        ckpt.write_manifest(manifest)
-
-    # One unfiltered count of the input (parquet footer statistics — no
-    # data scan) bounds the per-chunk row estimate that sizes task
-    # waves. A ts window makes this an OVER-estimate, which at most
-    # keeps the slot-based wave count — it never under-provisions tasks.
-    est_total_rows = _estimate_rows(pages, pages_path)
-
-    done_chunks = ckpt.done_chunks("extracted") if resume else set()
-    result = PipelineResult(out_root=out_root)
-    t_start = time.perf_counter()
+        done_chunks = set()
 
     bounds = [
         (c, c * n_buckets // n_chunks, (c + 1) * n_buckets // n_chunks)
         for c in range(n_chunks)
     ]
+    todo = [(c, lo, hi) for c, lo, hi in bounds if c not in done_chunks]
+    result = PipelineResult(
+        out_root=out_root, chunks_skipped=len(bounds) - len(todo)
+    )
+    if resume and not todo:
+        # Resume fast path: every chunk is committed, so the input is
+        # never opened — no listing of the pages table, no footer walk.
+        return result
+
+    # The input is resolved before the manifest is pinned (a resume
+    # onto an uncommitted root did so above), so a bad pages_path
+    # leaves no manifest behind.
+    if pages is None:
+        pages = spark.read.parquet(pages_path)
+    if not resume:
+        ckpt.write_manifest(manifest)
+
+    # The row estimate that sizes task waves (footer statistics — no
+    # data scan) applies the window's day predicate, so each window is
+    # sized from the days it reads. It stays an upper bound of the
+    # rows the exact ts predicate keeps, so it never plans too few
+    # tasks.
+    est_total_rows = _estimate_rows(pages, pages_path, ts_min, ts_max)
+    t_start = time.perf_counter()
 
     def run_chunk(chunk_id: int, lo: int, hi: int) -> List[dict]:
         """Process + commit one chunk; returns its per-bucket lineage
@@ -511,9 +601,6 @@ def run_pipeline(
         ckpt.append_lineage("extracted", chunk_id, per_bucket, wall_ms, run_id)
         return per_bucket
 
-    todo = [(c, lo, hi) for c, lo, hi in bounds if c not in done_chunks]
-    result.chunks_skipped = len(bounds) - len(todo)
-
     def record(per_bucket: List[dict]) -> None:
         result.chunks_run += 1
         result.n_docs += sum(b["n_docs"] for b in per_bucket)
@@ -583,7 +670,7 @@ def doc_status(spark: SparkSession, out_root: str, url: str) -> Optional[dict]:
     # round 3)
     if not ckpt.chunk_exists("docs", chunk):
         return None
-    docs = ckpt.read_chunk("docs", chunk)
+    docs = ckpt.read_chunk("docs", chunk, schema=STATUS_SCHEMA)
     row = (
         docs.where((F.col("bucket") == bucket) & (F.col("url") == url))
         .select("status", "error", "proc_ms")
@@ -643,23 +730,20 @@ def doc_status_bulk(
         )
         by_chunk.setdefault(chunk, []).append(r["url"])
 
-    empty_schema = (
-        "url string, bucket int, chunk int, status string, "
-        "error string, proc_ms double"
-    )
+    empty_schema = STATUS_SCHEMA.replace("bucket int,", "bucket int, chunk int,")
     parts = []
     for chunk in sorted(by_chunk):
         if not ckpt.chunk_exists("docs", chunk):
             continue  # not committed yet — absent, like the point lookup
-        docs = ckpt.read_chunk("docs", chunk)
+        docs = ckpt.read_chunk("docs", chunk, schema=STATUS_SCHEMA)
         parts.append(
             docs.where(F.col("url").isin(by_chunk[chunk])).select(
                 "url",
-                F.col("bucket").cast("int").alias("bucket"),
+                "bucket",
                 F.lit(chunk).cast("int").alias("chunk"),
                 "status",
                 "error",
-                F.col("proc_ms").cast("double").alias("proc_ms"),
+                "proc_ms",
             )
         )
     if not parts:

@@ -294,9 +294,14 @@ class CheckpointManager:
         shuffle, no per-bucket sliver files)."""
         df.write.mode("overwrite").parquet(self._chunk_path(name, chunk))
 
-    def read_chunk(self, name: str, chunk: int) -> DataFrame:
+    def read_chunk(
+        self, name: str, chunk: int, schema: Optional[str] = None
+    ) -> DataFrame:
+        """One committed chunk. An explicit ``schema`` (a subset of the
+        table's columns) skips schema inference and its Spark job."""
         self._recover_chunk(name, chunk)
-        return self.spark.read.parquet(self._chunk_path(name, chunk))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._chunk_path(name, chunk))
 
     def chunk_exists(self, name: str, chunk: int) -> bool:
         """True iff the chunk directory is committed (after repairing

@@ -375,3 +375,46 @@ def test_resume_accepts_legacy_raw_ts_spelling(spark, tmp_path):
         ts_min="2024-01-01", resume=True,
     )
     assert res.chunks_skipped == 1 and res.chunks_run == 0
+
+
+def test_complete_resume_never_opens_the_input(spark, tmp_path):
+    """A resume that finds every chunk committed returns before reading
+    pages_path: it still succeeds, skipping every chunk, after the input
+    directory is gone. The manifest checks still run first."""
+    import shutil
+
+    pages = str(tmp_path / "pages_gone")
+    _write_mixed_corpus(spark, pages)
+    out = str(tmp_path / "out_gone")
+    run_pipeline(spark, pages, out, n_buckets=4, n_chunks=2, ts_min="2020-01")
+    shutil.rmtree(pages)
+
+    res = run_pipeline(
+        spark, pages, out, n_buckets=4, n_chunks=2, resume=True, ts_min="2020-01"
+    )
+    assert (res.chunks_skipped, res.chunks_run, res.n_docs) == (2, 0, 0)
+    with pytest.raises(ValueError, match="resume parameter mismatch"):
+        run_pipeline(spark, pages, out, n_buckets=4, n_chunks=2, resume=True)
+
+
+def test_bad_input_path_leaves_no_manifest(spark, tmp_path):
+    """A missing pages_path fails before the manifest is pinned, on a
+    fresh run and on a resume onto an uncommitted root alike, so a later
+    resume under other bounds is not refused for work never committed."""
+    from pyspark.sql.utils import AnalysisException
+
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+
+    pages = str(tmp_path / "pages_missing")
+    out = str(tmp_path / "out_missing")
+    for resume in (False, True):
+        with pytest.raises(AnalysisException):
+            run_pipeline(
+                spark, pages, out, n_buckets=4, n_chunks=2,
+                resume=resume, ts_min="2020-01",
+            )
+        assert CheckpointManager(spark, out).read_manifest() is None
+
+    _write_mixed_corpus(spark, pages)
+    res = run_pipeline(spark, pages, out, n_buckets=4, n_chunks=2, resume=True)
+    assert res.chunks_run == 2 and res.n_docs == 21

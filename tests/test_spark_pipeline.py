@@ -281,3 +281,101 @@ def test_more_chunks_than_buckets(spark, pages_path, tmp_path):
         resume=True,
     )
     assert res2.chunks_run == 0 and res2.chunks_skipped == 4
+
+
+def _write_day_corpus(spark, path, partitioned=True):
+    """6,000 tiny pages, 200 per day over 30 days (hours spread across
+    each day, every 100th page a giant one); returns the rows' warc_ts
+    strings."""
+    stamps = [
+        f"2025-01-{1 + i // 200:02d} {(i * 7) % 24:02d}:{i % 60:02d}:00"
+        for i in range(6000)
+    ]
+    giant = b"<html>" + b"x" * 40_000 + b"</html>"
+    df = spark.createDataFrame(
+        [(f"https://day.example/{i}", ts,
+          giant if i % 100 == 0 else b"<html>x</html>", "", "de")
+         for i, ts in enumerate(stamps)],
+        "url string, warc_ts string, html binary, text string, lang string",
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts")).withColumn(
+        "warc_date", F.to_date("warc_ts")
+    )
+    writer = df.repartition(4).write.mode("overwrite")
+    if partitioned:
+        writer = writer.partitionBy("warc_date")
+    writer.parquet(path)
+    return stamps
+
+
+@pytest.fixture(scope="module")
+def day_corpus(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("days") / "pages")
+    return path, _write_day_corpus(spark, path)
+
+
+def test_estimate_rows_applies_the_day_predicate(spark, day_corpus):
+    """The wave-sizing estimate counts only the day-directories a ts
+    window's day predicate keeps: exactly the rows of the days its
+    bounds fall on, never fewer than the rows the exact warc_ts
+    predicate keeps. The Spark-count fallback gives the same number."""
+    from credit_ocr_backend_spark.plans.pipeline import _estimate_rows
+
+    path, stamps = day_corpus
+    pages = spark.read.parquet(path)
+    ts_min, ts_max = "2025-01-04 12:00:00", "2025-01-07 06:00:00"
+
+    est = _estimate_rows(pages, path, ts_min, ts_max)
+    touched = sum("2025-01-04" <= ts[:10] <= "2025-01-07" for ts in stamps)
+    exact = sum(ts_min <= ts < ts_max for ts in stamps)
+    assert est == touched == 800
+    assert est >= exact
+    assert exact == pages.where(
+        (F.col("warc_ts") >= F.to_timestamp(F.lit(ts_min)))
+        & (F.col("warc_ts") < F.to_timestamp(F.lit(ts_max)))
+    ).count()
+    # one-sided bounds, and the non-local (Spark count) path
+    assert _estimate_rows(pages, path, ts_min, None) == 200 * 27
+    assert _estimate_rows(pages, path, None, ts_max) == 200 * 7
+    assert _estimate_rows(pages, "remote://pages", ts_min, ts_max) == est
+    # a window with no day in the table is sized as empty
+    assert _estimate_rows(pages, path, "2030-01-01", "2030-01-02") == 0
+
+
+def test_estimate_rows_full_count_when_unbounded_or_unpartitioned(
+    spark, day_corpus, tmp_path
+):
+    """No bounds (the two-argument form), or a layout without
+    warc_date= directories: the estimate is the whole table."""
+    from credit_ocr_backend_spark.plans.pipeline import _estimate_rows
+
+    days, _ = day_corpus
+    assert _estimate_rows(spark.read.parquet(days), days) == 6000
+
+    flat = str(tmp_path / "flat")
+    _write_day_corpus(spark, flat, partitioned=False)
+    flat_pages = spark.read.parquet(flat)
+    assert _estimate_rows(
+        flat_pages, flat, "2025-01-04 12:00:00", "2025-01-07 06:00:00"
+    ) == 6000
+
+
+def test_window_is_sized_from_its_own_rows(spark, day_corpus):
+    """A window of ~600 rows in a 6,000-row table, at parallelism 4:
+    sized from the window it gets one wave (4 bulk partitions) plus
+    the 2 giant-doc partitions; sized from the whole table it got 3
+    waves (12 + 2), i.e. a few dozen rows per Python task."""
+    from credit_ocr_backend_spark.plans.pipeline import (
+        _defuse_skew, _estimate_rows, _input_slice,
+    )
+
+    path, _ = day_corpus
+    pages = spark.read.parquet(path)
+    ts_min, ts_max = "2025-01-04 00:00:00", "2025-01-07 00:00:00"
+    window = _input_slice(pages, 16, 0, 16, ts_min, ts_max)
+    assert window.count() == 600
+
+    est = _estimate_rows(pages, path, ts_min, ts_max)
+    assert _defuse_skew(window, 4, est_rows=est).rdd.getNumPartitions() == 4 + 2
+    assert _defuse_skew(
+        window, 4, est_rows=_estimate_rows(pages, path)
+    ).rdd.getNumPartitions() == 12 + 2
